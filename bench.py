@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -177,7 +178,7 @@ def main() -> None:
         # bench really ran at $SPARK_GRAFT_CPUS.
         "calibration_scaling_sec": {"pre": calib_scale_pre,
                                     "post": _calibrate_scaling(spark)},
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
+        "cpus": _effective_cpus(sc),
         "default_parallelism": sc.defaultParallelism,
         "master": sc.master,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
@@ -194,6 +195,14 @@ def main() -> None:
     compact = {k: v for k, v in result.items()
                if k not in ("tpch", "spread_max_over_median")}
     print(json.dumps(compact), flush=True)
+
+
+def _effective_cpus(sc) -> int:
+    """Cores the session runs on: N of a ``local[N]`` master, else the
+    scheduler's default parallelism (``local[*]`` resolves to the host's
+    cores there; a cluster master reports its total executor cores)."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", sc.master)
+    return int(m.group(1)) if m else sc.defaultParallelism
 
 
 def _persist_full_result(result: dict, sf: str) -> None:
@@ -224,8 +233,11 @@ def _persist_full_result(result: dict, sf: str) -> None:
     # _c{cpus} suffix so they can never squat on the round's sealed
     # 32-core evidence slot (VERDICT r17 item 2c: the driver's 8-core
     # r17 run landed in BENCH_LOCAL_r18.json, the next round's slot).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    suffix = "" if cpus == "32" else f"_c{cpus}"
+    # The core count is the one the session really ran at, never an env
+    # default: an env-less local[*] run on a non-32-core host must not
+    # land in the unsuffixed slot.
+    cpus = result["cpus"]
+    suffix = "" if cpus == 32 else f"_c{cpus}"
     out = os.path.join(root, f"BENCH_LOCAL_r{rnd}{suffix}.json")
     if os.path.exists(out):
         # r12 ADVICE: a second sf0.1 run in the same round silently

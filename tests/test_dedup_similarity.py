@@ -136,12 +136,19 @@ class TestTextNearDups:
         shared = D.eager_filled_persist(df)
         lvl = shared.storageLevel
         assert lvl.useMemory and lvl.useDisk  # spillable, not memory-pinned
-        # the fill already happened at construction: the RDD reports
-        # cached partitions without any consumer having run yet
+        # the fill already happened at construction: the frame's OWN
+        # cached RDD (the InMemoryRelation's column buffers, found via
+        # the cache manager — not any RDD a previous test left cached)
+        # holds every partition without any consumer having run yet
+        cached = (spark._jsparkSession.sharedState().cacheManager()
+                  .lookupCachedData(shared._jdf))
+        assert cached.isDefined(), "frame is not registered as cached"
+        buffers = (cached.get().cachedRepresentation().cacheBuilder()
+                   .cachedColumnBuffers())
         jsc = spark.sparkContext._jsc.sc()
-        rdd_infos = [i for i in jsc.getRDDStorageInfo()
-                     if i.numCachedPartitions() > 0]
-        assert rdd_infos, "persist was not filled eagerly"
+        own = [i for i in jsc.getRDDStorageInfo() if i.id() == buffers.id()]
+        assert own and own[0].numCachedPartitions() == own[0].numPartitions(), \
+            "persist was not filled eagerly"
         assert shared.count() == 1000  # consumers read the filled cache
         shared.unpersist()
         assert not shared.storageLevel.useMemory  # deterministic release

@@ -121,7 +121,7 @@ def test_incremental_merge_equals_full_recompute_at_every_cutoff(spark):
     from pyspark.sql import functions as F
 
     from windowsession_using_kafka_flink_docker_spark.operators.session_store import (
-        merge_session_store,
+        merge_sessions,
         sessions_full as _sessions_full,
     )
 
@@ -162,7 +162,7 @@ def test_incremental_merge_equals_full_recompute_at_every_cutoff(spark):
         cut = t(cut_s)
         store = _sessions_full(all_ev.where(F.col("ts") < F.lit(cut)))
         fresh = _sessions_full(all_ev.where(F.col("ts") >= F.lit(cut)))
-        got = _collect_sessions(merge_session_store(store, fresh))
+        got = _collect_sessions(merge_sessions(store, fresh))
         assert got == want, f"cutoff at +{cut_s}s diverged"
 
 
@@ -266,7 +266,7 @@ def test_late_repair_bridges_extends_and_opens(spark):
 
 @pytest.mark.usefixtures("spark")
 class TestMergeProperties:
-    """Randomized cutoff-invariance for merge_session_store: whatever
+    """Randomized cutoff-invariance for merge_sessions: whatever
     the split point, store-tail merge equals from-scratch
     sessionization. Deltas biased around the 600 s boundary (equal
     merges, +1 splits — both engines agree, probed empirically)."""
@@ -298,7 +298,7 @@ class TestMergeProperties:
         from pyspark.sql import functions as F
 
         from windowsession_using_kafka_flink_docker_spark.operators.session_store import (
-            merge_session_store,
+            merge_sessions,
             sessions_full as _sessions_full,
         )
 
@@ -315,7 +315,7 @@ class TestMergeProperties:
         cut = times[min(int(cut_ratio * len(times)), len(times) - 1)]
         store = _sessions_full(ev.where(F.col("ts") < F.lit(cut)))
         fresh = _sessions_full(ev.where(F.col("ts") >= F.lit(cut)))
-        got = _collect_sessions(merge_session_store(store, fresh))
+        got = _collect_sessions(merge_sessions(store, fresh))
         want = _collect_sessions(_sessions_full(ev))
         assert got == want
 

@@ -238,6 +238,71 @@ def test_late_arrival_dead_letter_quarantines_and_continues(
     assert _rows(maint.current()) == want
 
 
+def test_clean_merge_stays_within_job_budget(spark, sf_dir,
+                                             tmp_path_factory):
+    """A clean merge (previous version present, no late users) is one
+    plan with one user_id shuffle, materialized once: the late count,
+    the frozen increment and the tail version all read that
+    materialization, so the merge submits at most 6 Spark jobs."""
+    cutoff = _straddle_cutoff(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events").select(*_COLS)
+    b0 = ev.where(F.col("ts") < F.lit(cutoff)).localCheckpoint()
+    b1 = ev.where(F.col("ts") >= F.lit(cutoff)).localCheckpoint()
+    dlq = str(tmp_path_factory.mktemp("budget_dlq"))
+    maint = IncrementalSessionStoreMaintainer(
+        spark, str(tmp_path_factory.mktemp("budget_state")),
+        dead_letter_dir=dlq)
+    maint.merge_batch(b0, 0)
+
+    sc = spark.sparkContext
+    group = "session-store-merge-budget"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, "one clean session-store merge")
+    try:
+        maint.merge_batch(b1, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert os.listdir(dlq) == []  # clean: nothing quarantined
+    assert _rows(maint.current()) == _rows(_sessions_full(ev))
+    assert 1 <= len(jobs) <= 6, f"{len(jobs)} Spark jobs for one merge"
+
+
+def test_event_at_stored_session_end_merges_not_quarantined(
+        spark, tmp_path_factory):
+    """The late rule is STRICT: a batch whose first event for a user
+    lands exactly on that user's stored session_end merges into the
+    session; one second earlier is late and quarantines."""
+    import datetime
+
+    base = datetime.datetime(2024, 1, 1)
+
+    def t(s):
+        return base + datetime.timedelta(seconds=s)
+
+    b0 = spark.createDataFrame([
+        (1, t(0), 1, 1.00), (2, t(100), 1, 2.00),   # u1: [0, 100]
+        (3, t(0), 2, 4.00), (4, t(300), 2, 8.00),   # u2: [0, 300]
+    ], _SCHEMA)
+    b1 = spark.createDataFrame([
+        (5, t(100), 1, 16.00), (6, t(200), 1, 32.00),  # AT u1's end
+        (7, t(299), 2, 64.00),                         # before u2's end
+    ], _SCHEMA)
+    dlq = str(tmp_path_factory.mktemp("boundary_dlq"))
+    maint = IncrementalSessionStoreMaintainer(
+        spark, str(tmp_path_factory.mktemp("boundary_state")),
+        dead_letter_dir=dlq)
+    maint.merge_batch(b0, 0)
+    maint.merge_batch(b1, 1)
+
+    quarantined = spark.read.parquet(os.path.join(dlq, "b=1"))
+    assert sorted(r.event_id for r in quarantined.collect()) == [7]
+    got = sorted((r.user_id, r.session_start, r.session_end, r.sum_cents,
+                  r.event_count) for r in maint.current().collect())
+    assert got == [(1, t(0), t(200), 5100, 4), (2, t(0), t(300), 1200, 2)]
+
+
 def _cents_atoms(df):
     """Raw events as degenerate session atoms [ts, ts]."""
     cents = F.round(F.col("value") * 100, 0).cast("long")

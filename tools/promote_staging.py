@@ -19,7 +19,7 @@ Promotion day checklist (per promoted entry):
      wrap with @register(name, oracle=..., description=..., tags=...)
      — description/tags are already in STAGED in final form;
   2. delete the staging copy; keep shared helpers (e.g.
-     merge_session_store feeds streaming/session_store.py) by moving
+     resessionize_atoms feeds streaming/session_store.py) by moving
      them to operators/, updating the maintainer import;
   3. tests/test_staging_r15.py's not-yet-registered guard inverts by
      itself (it asserts no STAGED name is in CATALOG);

@@ -15,7 +15,9 @@ grows with the frozen increment count and is bounded by the in-stream
 The events table is sliced into N chronological batches (monotonicity
 contract), ingested twice: once with compaction disabled and once with
 ``compact_every=16``. Per-batch merge wall time is sampled at
-checkpoints, current() is timed (min of 3) at the end of each run, and
+checkpoints, the median merge seconds and Spark jobs (counted per merge
+under a job group) are taken over every merge with a previous version,
+current() is timed (min of 3) at the end of each run, and
 — as the honest "what would the old design cost" yardstick — the time
 to rewrite the final full table whole is measured once (that was the
 OLD per-batch floor at the final store size).
@@ -25,7 +27,8 @@ OLD per-batch floor at the final store size).
 
 Prints one JSON line:
     {"n_events": ..., "n_batches": N,
-     "merge_sec_at": {"1": s, "10": s, "25": s, "48": s},
+     "merge_sec_at": {"1": s, "10": s, "25": s, "48": s,
+                      "median": s, "jobs_median": n},
      "merge_sec_at_compacted": {...}, "final_leaves": n,
      "final_leaves_compacted": n, "read_sec": s,
      "read_sec_compacted": s, "whole_rewrite_sec": s,
@@ -37,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -72,13 +76,22 @@ def _run(spark, slices, compact_every):
     state = tempfile.mkdtemp(prefix="sess_stress_")
     maint = IncrementalSessionStoreMaintainer(
         spark, state, compact_every=compact_every)
-    merge_at = {}
+    sc = spark.sparkContext
+    merge_at, secs, jobs = {}, [], []
     for i, sl in enumerate(slices):
+        group = f"sess-stress-{compact_every}-{i}"
+        sc.setJobGroup(group, "session-store merge")
         t0 = time.perf_counter()
         maint.merge_batch(sl, i)
         dt = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        secs.append(dt)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         if (i + 1) in CHECKPOINTS:
             merge_at[str(i + 1)] = round(dt, 3)
+    # per-merge medians over the merges that have a previous version
+    merge_at["median"] = round(statistics.median(secs[1:]), 3)
+    merge_at["jobs_median"] = statistics.median(jobs[1:])
     best = None
     for _ in range(3):
         t0 = time.perf_counter()

@@ -1,11 +1,11 @@
 """Session-store primitives: fixed-gap sessionization with exact
-BIGINT cents, the store/delta tail merge, and the continuation-cutoff
-derivation — shared by the streaming session-store maintainer
-(streaming/session_store.py), the staged ``incremental_session_merge``
-/ ``late_event_session_repair`` catalog entries (plans/staging_r15.py,
-promoted r16), and their tests. Lives in operators/ so the runtime
-maintainer never imports the plans layer (which would drag full
-catalog registration into every streaming import).
+BIGINT cents, the atom merge, and the continuation-cutoff derivation —
+shared by the streaming session-store maintainer
+(streaming/session_store.py), the ``incremental_session_merge`` /
+``late_event_session_repair`` catalog entries (plans/parity.py), and
+their tests. Lives in operators/ so the runtime maintainer never
+imports the plans layer (which would drag full catalog registration
+into every streaming import).
 
 Semantics: a session is a maximal run of same-user events with
 inter-event gaps <= ``gap_s`` (boundary INCLUSIVE — Spark's
@@ -14,6 +14,15 @@ oracles' ``> gap`` new-session test; probed empirically in
 tests/test_staging_r15.py). The reference's 30 s gap
 (flink_stream_task1.py:30-41) is widened to 10 minutes for the
 maintenance family so multi-event sessions exist at every test SF.
+
+One merge serves every incremental path: stored sessions and new
+events are both session ATOMS (a raw event is the degenerate atom
+[ts, ts]), and :func:`resessionize_atoms` fuses any union of atoms into
+the sessions of the underlying events — one ``user_id`` shuffle, with
+no precondition on how the events were split between the two sides.
+The streaming maintainer runs it over {stored tail} ∪ {batch events},
+the merge entry over {store sessions} ∪ {fresh sessions}, the
+dead-letter drain over {stored sessions} ∪ {late events}.
 """
 
 from __future__ import annotations
@@ -38,6 +47,17 @@ def sessions_full(ev: DataFrame) -> DataFrame:
             .drop("session_window"))
 
 
+def event_atoms(ev: DataFrame) -> DataFrame:
+    """Raw events as degenerate session atoms [ts, ts] with their own
+    exact cents and a count of 1 — the store's row shape. A null-ts
+    event belongs to no session, as in ``session_window``."""
+    cents = F.round(F.col("value") * 100, 0).cast("long")
+    return ev.where(F.col("ts").isNotNull()).select(
+        "user_id", F.col("ts").alias("session_start"),
+        F.col("ts").alias("session_end"), cents.alias("sum_cents"),
+        F.lit(1).cast("long").alias("event_count"))
+
+
 def continuation_cutoff(ev: DataFrame, gap_s: float = GAP_S):
     """The latest event ts that CONTINUES a session (has a same-user
     predecessor within the gap), or None. Splitting the stream there
@@ -51,28 +71,31 @@ def continuation_cutoff(ev: DataFrame, gap_s: float = GAP_S):
     return cont.agg(F.max("ts")).first()[0]
 
 
-def resessionize_atoms(atoms: DataFrame, gap_s: float = GAP_S) -> DataFrame:
+def resessionize_atoms(atoms: DataFrame, gap_s: float = GAP_S,
+                       carry: tuple[str, ...] = ()) -> DataFrame:
     """Gaps-and-islands over session ATOMS — rows shaped like the store
     (user_id, session_start, session_end, sum_cents, event_count),
     where a raw event is the degenerate atom [ts, ts] with its own
     cents and count 1. Returns the same shape with overlapping /
     within-gap atoms fused (boundary inclusive, matching
-    ``session_window``).
+    ``session_window``). ``carry`` names per-user columns (constant
+    within a user) that pass through to the output unchanged.
 
-    This is the repair primitive the dead-letter drain needs: a store's
-    sessions for one user are maximal runs separated by > gap, so
-    re-sessionizing {stored atoms} ∪ {late-event atoms} equals
-    re-sessionizing the user's full raw history — a late event can only
-    extend a session, open its own, or bridge two (it can never SPLIT
-    one), so no information beyond the stored partials is required.
-    Proven against the full recompute in
+    Exactness: a store's sessions for one user are maximal runs
+    separated by > gap, so re-sessionizing {stored atoms} ∪ {new-event
+    atoms} equals re-sessionizing the user's full raw history — a new
+    event, on time or late, can only extend a session, open its own, or
+    bridge two (it can never SPLIT one), so no information beyond the
+    stored partials is required. Proven against the full recompute in
     tests/test_session_store_stream.py.
 
-    Scale: one shuffle on user_id; the window runs over per-user atom
-    counts (store sessions + late events of that user — ingest-sized,
-    never corpus-sized). Island detection uses the RUNNING MAX of
-    prior ends, not lag, because a late atom can nest entirely inside
-    a stored span."""
+    Scale: one shuffle on user_id; every window and the island
+    aggregate reuse that partitioning, so a caller that partitions by
+    user_id first (the maintainer's late flag) adds no exchange. The
+    windows run over per-user atom counts (the user's stored atoms plus
+    their new events — ingest-sized, never corpus-sized). Island
+    detection uses the RUNNING MAX of prior ends, not lag, because a
+    late atom can nest entirely inside a stored span."""
     w = Window.partitionBy("user_id").orderBy("session_start",
                                               "session_end")
     prev_max_end = F.max("session_end").over(
@@ -86,7 +109,7 @@ def resessionize_atoms(atoms: DataFrame, gap_s: float = GAP_S) -> DataFrame:
     islands = flagged.withColumn(
         "_sid", F.sum("_new").over(
             w.rowsBetween(Window.unboundedPreceding, 0)))
-    return (islands.groupBy("user_id", "_sid")
+    return (islands.groupBy("user_id", "_sid", *carry)
             .agg(F.min("session_start").alias("session_start"),
                  F.max("session_end").alias("session_end"),
                  F.sum("sum_cents").alias("sum_cents"),
@@ -94,46 +117,11 @@ def resessionize_atoms(atoms: DataFrame, gap_s: float = GAP_S) -> DataFrame:
             .drop("_sid"))
 
 
-def merge_session_store(store: DataFrame, fresh: DataFrame,
-                        gap_s: float = GAP_S) -> DataFrame:
-    """Merge a persisted session store with the sessions of a strictly
-    later event batch (every fresh event at/after every store event of
-    its user). Per user at most ONE merge is possible — the store
-    session with the latest end against the first fresh session
-    (everything earlier in the store is > gap from any fresh event by
-    construction; the second fresh session is > gap past the first by
-    sessionization) — and the merged row combines BIGINT partials
-    exactly. Equals full-recompute sessionization under the
-    monotonicity precondition (cutoff-sweep + hypothesis property
-    tests, tests/test_staging_r15.py)."""
-    w_tail = Window.partitionBy("user_id").orderBy(F.desc("session_end"))
-    tail = (store.withColumn("_rn", F.row_number().over(w_tail))
-            .where(F.col("_rn") == 1).drop("_rn"))
-    w_head = Window.partitionBy("user_id").orderBy("session_start")
-    head = (fresh.withColumn("_rn", F.row_number().over(w_head))
-            .where(F.col("_rn") == 1).drop("_rn"))
-
-    joined = (tail.alias("s").join(head.alias("t"), "user_id")
-              .where(F.col("t.session_start").cast("double")
-                     - F.col("s.session_end").cast("double") <= gap_s))
-    pairs = joined.select(
-        "user_id",
-        F.col("s.session_start").alias("old_start"),
-        F.col("t.session_start").alias("new_start"),
-        F.col("s.session_start").alias("session_start"),
-        F.col("t.session_end").alias("session_end"),
-        (F.col("s.sum_cents") + F.col("t.sum_cents")).alias("sum_cents"),
-        (F.col("s.event_count") + F.col("t.event_count"))
-        .alias("event_count"))
-
-    keep_store = store.join(
-        pairs.select("user_id", F.col("old_start").alias("session_start")),
-        ["user_id", "session_start"], "left_anti")
-    keep_fresh = fresh.join(
-        pairs.select("user_id", F.col("new_start").alias("session_start")),
-        ["user_id", "session_start"], "left_anti")
-    cols = ["user_id", "session_start", "session_end", "sum_cents",
-            "event_count"]
-    return (keep_store.select(*cols)
-            .unionByName(keep_fresh.select(*cols))
-            .unionByName(pairs.select(*cols)))
+def merge_sessions(store: DataFrame, fresh: DataFrame,
+                   gap_s: float = GAP_S) -> DataFrame:
+    """Merge two session sets — a persisted store and the sessions of
+    newly arrived events — into the sessions of all their events: both
+    sides are atoms, so the union re-sessionizes exactly, wherever the
+    events were split between the sides (cutoff-sweep and hypothesis
+    property tests, tests/test_maintenance_entries.py)."""
+    return resessionize_atoms(store.unionByName(fresh), gap_s)

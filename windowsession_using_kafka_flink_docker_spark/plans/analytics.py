@@ -1689,6 +1689,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At 100 TB the orders join is an SMJ already keyed on l_orderkey and
     # this repartition collapses into it (same key, conf partition
     # count); the old form's two pair-grain exchanges cost strictly more.
+    # repartition(n, key) is REPARTITION_BY_NUM: AQE never coalesces or
+    # skew-splits it. The count stays because the win above was measured
+    # only in this form (sf0.1, 32 partitions) and it matches a same-key
+    # join's partition count; the AQE-coalescable form is unmeasured.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     lines = (li.join(fo, li.l_orderkey == fo.o_orderkey)
              .select("l_orderkey", "l_suppkey",
@@ -2547,7 +2551,8 @@ def q20_dominant_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so neither plans its own Exchange — 3 shuffles became 2. Measured
     # same-JVM at sf0.1: 2.32 -> 2.01 s median, rows identical. (q20 was
     # also the worst 64k-AQE-floor regression, 1.31x; fewer tiny
-    # exchanges makes it floor-insensitive.)
+    # exchanges makes it floor-insensitive.) REPARTITION_BY_NUM, which
+    # AQE never coalesces or skew-splits; the count stays as in q21.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     pair = (
         li.where((F.col("l_shipdate") >= "1996-01-01")

@@ -351,7 +351,7 @@ def session_top10_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from windowsession_using_kafka_flink_docker_spark.operators.session_store import (  # noqa: E402
     continuation_cutoff,
-    merge_session_store,
+    merge_sessions,
     sessions_full as _sessions_full,
 )
 from windowsession_using_kafka_flink_docker_spark.sources.batch import (  # noqa: E402
@@ -392,28 +392,25 @@ SELECT user_id, session_start, session_end, sum_cents, event_count
 FROM sess_full
 """,
     description="Append-side session-store maintenance: new arrivals are "
-                "sessionized alone and merged against the store's per-user "
-                "tail (only the latest store session can extend; only the "
-                "first new session can attach) with BIGINT-exact combined "
-                "partials — the reference's session-gap semantics taken "
-                "incremental (10-minute gap so every test SF has "
-                "multi-event sessions), history never re-sessionized. "
-                "Oracle: the full gaps-and-islands recompute; the cutoff "
-                "must be invisible in the result.",
+                "sessionized alone and merged with the store as session "
+                "atoms — one gaps-and-islands pass over store ∪ fresh "
+                "with BIGINT-exact combined partials — the reference's "
+                "session-gap semantics taken incremental (10-minute gap "
+                "so every test SF has multi-event sessions), raw history "
+                "never re-read. Oracle: the full gaps-and-islands "
+                "recompute; the cutoff must be invisible in the result.",
     tags=("session", "window", "incremental", "maintenance"),
 )
 def incremental_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events before a cutoff are the persisted store (sessionized once,
     never revisited); events at or after it are the new arrivals. New
-    arrivals are sessionized ALONE, then merged against the store tail:
-    per user, only the store session with the latest end can extend
-    (everything earlier is > gap from any new event by construction),
-    and only the first new session can attach (the second is > gap past
-    the first by sessionization). The merged row carries BIGINT-exact
-    combined partials — the same merge-without-recompute discipline as
-    the streaming maintainers (streaming/analytics_twins.py). Result
-    must equal the full recompute, which is exactly what the oracle
-    computes.
+    arrivals are sessionized ALONE, then merged with the store by
+    treating every session on both sides as an atom and fusing atoms
+    within the gap (operators/session_store.py:merge_sessions — the
+    same gaps-and-islands pass the streaming maintainer runs per
+    micro-batch). Merged rows carry BIGINT-exact combined partials, so
+    the result must equal the full recompute, which is exactly what the
+    oracle computes.
 
     The cutoff is derived so the merge is provably non-vacuous at every
     SF: the latest event that CONTINUES a session (has a same-user
@@ -421,31 +418,25 @@ def incremental_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     one straddling session. In production the cutoff is just the ingest
     high-water mark.
 
-    Scale: the store is read only at its per-user tail (at 100 TB a
-    time-partitioned store prunes to the last partition; here the tail
-    row_number runs over the just-built store), the delta is one
-    ingest's worth, and the merge join is tail-vs-head — two one-row-
-    per-user frames."""
+    Scale: one user_id shuffle over store sessions plus fresh sessions
+    (session-sized, never event-sized on the store side); each side is
+    consumed once."""
     ev = load_table(spark, sf_dir, "events")
     # Bounded driver-side scalar (one row — the scd.py:89 idiom): a
     # broadcast-crossJoin cutoff would re-run the lag-window pass inside
-    # EACH side's materialization below and block ts pushdown into the
-    # scan; as a literal it is one window pass total and both filters
-    # push down (measured: 4.9 -> 2.8 s warm at sf0.1).
+    # the plan and block ts pushdown into the scan; as a literal it is
+    # one window pass total and both filters push down (measured: 4.9 ->
+    # 2.8 s warm at sf0.1).
     cutoff = continuation_cutoff(ev)
     if cutoff is None:  # degenerate corpus: no continuation events at all
         return _sessions_full(ev)
 
-    # The store IS a materialized artifact in this pattern — and the
-    # merge consumes each side twice (tail/keep_store, head/keep_fresh),
-    # so an un-materialized plan would re-sessionize both sides per
-    # union branch (measured: 32 -> 14 s cold at sf0.1; with the scalar
-    # cutoff above, 12.5 s cold / 2.8 s warm).
+    # The store IS a materialized artifact in this pattern (a persisted
+    # table, read back as blocks); the fresh side is one ingest's plan.
     store = _sessions_full(
         ev.where(F.col("ts") < F.lit(cutoff))).localCheckpoint()
-    fresh = _sessions_full(
-        ev.where(F.col("ts") >= F.lit(cutoff))).localCheckpoint()
-    return merge_session_store(store, fresh)
+    fresh = _sessions_full(ev.where(F.col("ts") >= F.lit(cutoff)))
+    return merge_sessions(store, fresh)
 
 
 #: Deterministic late-arrival plant: every 19th event (offset 3) is

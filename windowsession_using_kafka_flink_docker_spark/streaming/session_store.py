@@ -5,11 +5,11 @@ The reference's whole purpose is session windows over a stream
 inside the engine and emit closed sessions once. This maintainer is the
 materialized-view form of the same computation: the full session table
 (10-minute gap, exact BIGINT cents) kept up to date across micro-batches
-by TAIL MERGE — each batch is sessionized alone, then merged against the
-store's per-user tail via :func:`merge_session_store`
-(operators/session_store.py — shared with the staged
-``incremental_session_merge`` catalog entry, which certifies the merge
-against a full-recompute DuckDB oracle).
+by TAIL MERGE — each batch's raw events are fused with the store's
+per-user tail as session atoms (operators/session_store.py:
+resessionize_atoms — the same gaps-and-islands pass the
+``incremental_session_merge`` catalog entry certifies against a
+full-recompute DuckDB oracle, and the dead-letter drain uses).
 
 Correctness precondition — and the one thing the tail merge cannot
 absorb — is PER-USER EVENT-TIME MONOTONICITY across batches: every
@@ -18,26 +18,29 @@ event in batch N+1 must be at/after every stored event of its user
 flink_stream_task1.py:23-28). A violating user's batch slice is a LATE
 arrival; the correct response is the ``late_event_session_repair`` path
 (re-sessionize the touched users from raw events), which a state-only
-maintainer cannot run. ``merge_batch`` therefore detects the overlap
-with a tail-vs-head check and either fails fast (default) or — when a
-``dead_letter_dir`` is configured, as the continuous
-jobs/maintain_analytics_job.py wiring does — QUARANTINES the late
-users' raw batch events to versioned parquet (``b=<batch_id>``,
-overwrite-mode ⇒ replay-idempotent) and merges the rest, so one late
-file can never wedge the whole job in a crash loop.
+maintainer cannot run. ``merge_batch`` therefore flags a user whose
+earliest batch event precedes their stored session end and either
+fails fast (default) or — when a ``dead_letter_dir`` is configured, as
+the continuous jobs/maintain_analytics_job.py wiring does —
+QUARANTINES the late users' raw batch events to versioned parquet
+(``b=<batch_id>``, overwrite-mode ⇒ replay-idempotent) and merges the
+rest, so one late file can never wedge the whole job in a crash loop.
 
-Scale (r17, the write-amplification fix): per batch the work is
-sessionize-the-delta (one ingest), an aggregate over two
-one-row-per-user frames for the guard, and the tail merge. State is
-the session table itself — a maintained OUTPUT — split in two:
+Scale (the one-shuffle merge): per batch the work is ONE plan over
+{previous tail} ∪ {batch events as atoms}, shuffled once by user_id
+(late flag, atom fusion and newest-first rank share the partitioning)
+and materialized once; the late count, the quarantine, the frozen
+increment and the tail version all read that materialization — four
+Spark jobs for a clean merge. State is the session table itself — a
+maintained OUTPUT — split in two:
 
 - ``frozen/inc=<batch_id>`` — append-only increments of sessions that
   can never change again. Under the per-user monotonicity
   precondition a batch can merge only with its user's NEWEST-ending
-  session (``merge_session_store`` formalizes this), so every session
-  that is not its user's newest at write time is immutable. Each
-  increment is one batch's newly-closed sessions (batch-sized), with
-  the versioned-index commit discipline (``_SUCCESS`` per leaf,
+  session (every earlier one ends > gap before it starts), so every
+  session that is not its user's newest at write time is immutable.
+  Each increment is one batch's newly-closed sessions (batch-sized),
+  with the versioned-index commit discipline (``_SUCCESS`` per leaf,
   overwrite-on-replay ⇒ replay-idempotent).
 - the TAIL — exactly one row per user (their newest session), a
   ``_VersionedState`` snapshot ``v=<batch_id>`` (shared replay/crash
@@ -64,14 +67,13 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from windowsession_using_kafka_flink_docker_spark.operators.session_store import (
-    merge_session_store,
+    event_atoms,
     resessionize_atoms,
-    sessions_full,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
     compact_components,
@@ -155,18 +157,17 @@ class IncrementalSessionStoreMaintainer:
             F.desc("session_end"), F.desc("session_start"))
         return sessions.withColumn("_rn", F.row_number().over(w))
 
-    def _write_state(self, batch_id: int, sessions: DataFrame) -> None:
-        """Persist a batch's live session set: frozen increment FIRST,
-        tail version second (the commit point — see module docstring
-        for the orphan-increment argument), then the count-triggered
-        fold. One materialization serves both writes."""
-        ranked = self._split_ranked(sessions).localCheckpoint()
-        (ranked.where(F.col("_rn") > 1).drop("_rn")
+    def _write_state(self, batch_id: int, ranked: DataFrame) -> None:
+        """Persist a batch's materialized, ranked session set: frozen
+        increment FIRST, tail version second (the commit point — see
+        module docstring for the orphan-increment argument), then the
+        count-triggered fold."""
+        (ranked.where(F.col("_rn") > 1).drop("_rn", "_late")
          .write.mode("overwrite")
          .parquet(os.path.join(self._frozen_dir(),
                                f"inc={batch_id:05d}")))
-        self.state.write(batch_id,
-                         ranked.where(F.col("_rn") == 1).drop("_rn"))
+        self.state.write(batch_id, ranked.where(F.col("_rn") == 1)
+                         .drop("_rn", "_late"))
         if self.compact_every \
                 and len(self._frozen_leaves()) >= self.compact_every \
                 and not os.path.isdir(self._repair_tmp()):
@@ -195,17 +196,14 @@ class IncrementalSessionStoreMaintainer:
             # drain already deleted (r15 ADVICE, high). The existing
             # version IS this batch's (possibly repaired) result: skip.
             return
-        fresh = sessions_full(batch_df).localCheckpoint()
-        prev = self.state.latest_before(batch_id)  # TAIL: 1 row/user
-        if prev is None:
-            self._write_state(batch_id, fresh)
-            return
-        # One materialization serves the guard count AND both joins
-        # below (r14 VERDICT minor: the un-checkpointed frame re-ran
-        # the two-aggregate join once per consumer — three times on a
-        # quarantining batch).
-        late_users = self._late_users(prev, fresh).localCheckpoint()
-        n_late = late_users.count()
+        # One materialization; its own job observes the late count.
+        late_users = F.col("_late") & (F.col("_rn") == 1)
+        obs = Observation()
+        ranked = (self._merge_ranked(self.state.latest_before(batch_id),
+                                     batch_df)
+                  .observe(obs, F.count_if(late_users).alias("late"))
+                  .localCheckpoint())
+        n_late = obs.get["late"]
         if n_late:
             if self.dead_letter_dir is None:
                 raise ValueError(
@@ -219,7 +217,8 @@ class IncrementalSessionStoreMaintainer:
             # repair path needs raw events, and a partial merge of a
             # late user would corrupt the store); overwrite per batch_id
             # keeps the quarantine replay-idempotent.
-            (batch_df.join(late_users, "user_id", "left_semi")
+            (batch_df.join(ranked.where(late_users).select("user_id"),
+                           "user_id", "left_semi")
              .write.mode("overwrite")
              .parquet(os.path.join(self.dead_letter_dir, f"b={batch_id}")))
             # Surface the quarantine (r14 ADVICE: silently-stale store
@@ -232,12 +231,32 @@ class IncrementalSessionStoreMaintainer:
             print(f"session_store: batch {batch_id} quarantined "
                   f"{n_late} late user(s); run dead_letter_backlog() / "
                   "repair_from_dead_letter() to inspect and drain")
-            fresh = (fresh.join(late_users, "user_id", "left_anti")
-                     .localCheckpoint())
-        # The merge sees only the per-user TAIL (1 row/user) — exactly
-        # the rows merge_session_store can touch; frozen rows never
-        # re-read, never rewritten.
-        self._write_state(batch_id, merge_session_store(prev, fresh))
+        self._write_state(batch_id, ranked)
+
+    def _merge_ranked(self, prev: DataFrame | None,
+                      batch_df: DataFrame) -> DataFrame:
+        """The batch merge as one plan partitioned by user_id: the
+        previous TAIL (one row per user — exactly the rows a monotone
+        batch can touch; frozen rows are never re-read) and the batch's
+        raw events as atoms. A user is LATE when their earliest batch
+        event precedes their stored session end (strict: an event AT
+        the end merges); a late user's batch atoms drop and their
+        stored tail survives unchanged. The rest fuse by
+        gaps-and-islands, then rank newest-first (``_split_ranked``).
+        Output: the session rows plus per-user ``_late`` and ``_rn``."""
+        atoms = event_atoms(batch_df).withColumn("_batch", F.lit(True))
+        if prev is not None:
+            atoms = prev.withColumn("_batch", F.lit(False)) \
+                .unionByName(atoms)
+        user = Window.partitionBy("user_id")
+        late = (F.min(F.when(F.col("_batch"), F.col("session_start")))
+                .over(user)
+                < F.max(F.when(~F.col("_batch"), F.col("session_end")))
+                .over(user))
+        kept = (atoms.withColumn("_late", F.coalesce(late, F.lit(False)))
+                .where(~(F.col("_late") & F.col("_batch")))
+                .drop("_batch"))
+        return self._split_ranked(resessionize_atoms(kept, carry=("_late",)))
 
     def _dead_letter_batches(self) -> list[str]:
         if not self.dead_letter_dir \
@@ -405,13 +424,8 @@ class IncrementalSessionStoreMaintainer:
             *[os.path.join(self.dead_letter_dir, d) for d in dirs])
         n_late = late.count()
         affected = late.select("user_id").distinct()
-        cents = F.round(F.col("value") * 100, 0).cast("long")
-        late_atoms = late.select(
-            "user_id", F.col("ts").alias("session_start"),
-            F.col("ts").alias("session_end"), cents.alias("sum_cents"),
-            F.lit(1).cast("long").alias("event_count"))
         touched = base.join(affected, "user_id", "left_semi")
-        repaired = resessionize_atoms(touched.unionByName(late_atoms))
+        repaired = resessionize_atoms(touched.unionByName(event_atoms(late)))
         ranked = self._split_ranked(
             base.join(affected, "user_id", "left_anti")
             .unionByName(repaired)
@@ -478,18 +492,6 @@ class IncrementalSessionStoreMaintainer:
         os.rename(tmp, os.path.join(self._frozen_dir(), "inc=00000"))
         os.remove(os.path.join(self._frozen_dir(), "inc=00000",
                                self._FOLDED))
-
-    @staticmethod
-    def _late_users(store: DataFrame, fresh: DataFrame) -> DataFrame:
-        """Users whose incoming sessions overlap their stored ones —
-        the tail-vs-head check over two one-row-per-user frames."""
-        tails = store.groupBy("user_id").agg(
-            F.max("session_end").alias("_tail_end"))
-        heads = fresh.groupBy("user_id").agg(
-            F.min("session_start").alias("_head_start"))
-        return (heads.join(tails, "user_id")
-                .where(F.col("_head_start") < F.col("_tail_end"))
-                .select("user_id"))
 
     def current(self) -> DataFrame:
         """The full maintained session table: frozen increments (scoped
